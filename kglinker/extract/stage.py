@@ -14,9 +14,9 @@ conversations in one Python call. Two ways to get that in Spark:
   never straddles a *partition* boundary, so the carry is always resolved
   within the partition.
 
-The broadcast ``KBArtifacts`` payload is loaded once per executor (Spark
-broadcast = the reference's shm-resident KB + automaton,
-``SharedKB/var2/main.c:352-381``).
+The broadcast ``KBArtifacts`` payload is loaded once per Python worker
+and kept across that worker's tasks (Spark broadcast in place of the
+reference's shm-resident KB + automaton, ``SharedKB/var2/main.c:352-381``).
 
 Scale design (north_rule: partitioning explicit):
 - one hash shuffle on ``conv_id`` feeds grouping and downstream
@@ -53,16 +53,12 @@ def _pa_schema():
         ("kb_id", pa.int64()), ("resolved", pa.string())])
 
 
-try:
-    _PA_SCHEMA = _pa_schema()
-except ImportError:  # pragma: no cover - pyarrow is a pyspark dependency
-    _PA_SCHEMA = None
+_PA_SCHEMA = _pa_schema()
 
 
 def _empty_out() -> pd.DataFrame:
-    return pd.DataFrame({c: pd.Series(dtype=t) for c, t in zip(
-        _OUT_COLS, ["object", "int32", "int32", "int32", "object", "object",
-                    "float64", "object"])})
+    """Zero-row frame typed like the Arrow path (``kb_id`` int64)."""
+    return _PA_SCHEMA.empty_table().to_pandas()
 
 
 def annotate_sorted_arrays(conv_ids, turn_idxs, texts, art,

@@ -137,7 +137,10 @@ def doc_linked(docs: DataFrame) -> DataFrame:
     all: the emitted hits are already distinct per (doc_id, pos), so the
     pre-r7 ``doc_mentions().distinct()`` round trip (one corpus-wide
     exchange + a second broadcast join) collapses into a pure projection
-    over the scan. Same rows, zero exchanges."""
+    over the scan. Same rows, zero exchanges.
+
+    Precondition: ``doc_id`` is unique in ``docs``. Nothing deduplicates
+    the output, so a repeated ``doc_id`` emits its hits once per copy."""
     best = _static_best()
     best_map = F.create_map(*[x for s in sorted(best)
                               for x in (F.lit(s),
@@ -157,7 +160,11 @@ def doc_cooccurrence(docs: DataFrame) -> DataFrame:
     exchange in the whole plan is the final (subj, obj) count aggregation
     (map-side combinable). The pre-r7 plan paid three corpus-wide
     exchanges here (linked distinct + groupBy(doc_id) + the count); the
-    DuckDB gate is byte-identical (min/distinct/sort all order-free)."""
+    DuckDB gate is byte-identical (min/distinct/sort all order-free).
+
+    Precondition: ``doc_id`` is unique in ``docs``. Pairs are built per
+    row, not per distinct ``doc_id``, so a repeated ``doc_id`` counts its
+    pairs once per copy and inflates their weight."""
     best = _static_best()
     best_map = F.create_map(*[x for s in sorted(best)
                               for x in (F.lit(s),

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["salted_count", "salted_agg_sum", "repartition_by_conv", "fan_out"]
+__all__ = ["salted_count", "salted_agg_sum", "fan_out"]
 
 
 # Analyzed-plan nodes under which probing df.rdd is provably harmless:
@@ -71,13 +71,6 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
-
-
-def repartition_by_conv(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Explicit conversation partitioning ahead of per-conv operators."""
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism * 2
-    return df.repartition(n, "conv_id")
 
 
 def _with_salt(df: DataFrame, salt_buckets: int) -> DataFrame:

@@ -62,31 +62,54 @@ def test_date_roundtrip(y, m, d):
 
 import pytest  # noqa: E402
 
+from kglinker.automaton.build import Automaton  # noqa: E402
+from kglinker.oracle_matcher import OracleLinker  # noqa: E402
+
 
 @pytest.fixture(autouse=True)
-def _bind_artifacts(artifacts):
-    """Bind the session-scoped artifacts into the hypothesis tests
-    (hypothesis can't take pytest fixtures directly)."""
+def _bind_artifacts(artifacts, oracle_linker):
+    """Bind the session-scoped artifacts and oracle into the hypothesis
+    tests (hypothesis can't take pytest fixtures directly)."""
     test_match_offsets_and_nonoverlap.art = artifacts
     test_annotation_deterministic_and_valid.art = artifacts
-    test_token_index_equals_trie_walk.art = artifacts
+    test_find_matches_equals_oracle_scan.art = artifacts
+    test_find_matches_equals_oracle_scan.oracle = oracle_linker
 
 
-@settings(max_examples=50, deadline=None)
+def _scan(automaton: Automaton, text: str) -> list[tuple]:
+    return [(m.start, m.end, m.surface, m.kb_ids, m.is_fragment)
+            for m in automaton.find_matches(text)]
+
+
+@settings(max_examples=60, deadline=None)
 @given(texts())
-def test_token_index_equals_trie_walk(text):
-    """The startswith-probe scan and the trie walk are the same function
-    (the probe path is the default; the trie is the hot-first-token
-    fallback) — forced head-to-head on random text."""
-    from kglinker.automaton.build import Automaton
-    art = test_token_index_equals_trie_walk.art
-    auto = art.automaton
-    old = Automaton._MAX_PROBES
-    try:
-        Automaton._MAX_PROBES = 10 ** 9
-        via_index = auto.find_matches(text)
-        Automaton._MAX_PROBES = -1
-        via_trie = auto.find_matches(text)
-    finally:
-        Automaton._MAX_PROBES = old
-    assert via_index == via_trie
+def test_find_matches_equals_oracle_scan(text):
+    """The engine scan (surface-dict probes per distinct length) equals
+    the oracle's independent scan (longest-first probe lists) on the
+    fixture dictionary."""
+    f = test_find_matches_equals_oracle_scan
+    assert _scan(f.art.automaton, text) == f.oracle._scan(text)
+
+
+# Hot first token: every URI starts with "https", and one URI extends
+# another past a non-alnum boundary, so a shortest-first scan would stop
+# at the shorter one.
+_HOT = {f"https://w.example/E{i:04d}": ((i,), False) for i in range(300)}
+_HOT["https://w.example/E0007/extra"] = ((999,), False)
+_HOT["https"] = ((1000,), True)
+_HOT_AUTOMATON = Automaton(_HOT)
+_HOT_ORACLE = OracleLinker(
+    [], [{"surface": s, "kb_ids": list(ids), "is_fragment": frag}
+         for s, (ids, frag) in _HOT.items()], [])
+_HOT_WORDS = (list(_HOT)[:12] + list(_HOT)[-2:]
+              + ["https://w.example/E12", "https://w.example/E0007x",
+                 "https://w.example", "viz", "a"])
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(st.tuples(st.sampled_from(_HOT_WORDS),
+                          st.sampled_from([" ", "/", ", ", "", "."])),
+                max_size=12))
+def test_find_matches_equals_oracle_scan_hot_first_token(parts):
+    text = "".join(w + sep for w, sep in parts)
+    assert _scan(_HOT_AUTOMATON, text) == _HOT_ORACLE._scan(text)
